@@ -84,8 +84,24 @@ def derive_decode_task_bytes(spark) -> int:
 
     v = os.environ.get("SPARK_GRAFT_DECODE_TASK_BYTES")
     if v:
-        return max(1, int(v))
+        try:
+            return max(1, int(v))
+        except ValueError:
+            raise ValueError(
+                f"SPARK_GRAFT_DECODE_TASK_BYTES={v!r}: expected a whole "
+                "number of bytes (e.g. 8388608)"
+            ) from None
     return 8 << 20
+
+
+def aqe_enabled(spark) -> bool:
+    """spark.sql.adaptive.enabled, read as Spark reads a boolean conf
+    (case-insensitively; an unreadable conf means the default, on)."""
+    try:
+        v = spark.conf.get("spark.sql.adaptive.enabled", "true")
+    except Exception:  # noqa: BLE001
+        return True
+    return str(v).strip().lower() == "true"
 
 
 def bypass_merge_threshold(spark) -> int:
@@ -179,17 +195,20 @@ def widen_for_kernel(df, factor: int = 2, min_task_bytes: int | None = None):
 
 
 def derive_num_partitions(spark, factor: int = 8, floor: int = 32) -> int:
-    """Default engine-partition count: ≥ factor × available cores.
+    """Default engine-partition (pid VALUE) count: ≥ factor × cores.
 
-    The r3 task-granularity sweep (BENCH_r03, 133→194 MB/s monotone in
-    task count at local[32]) showed coarse partitioning starves wide
-    clusters: with N ≈ cores a single slow task serializes the tail,
-    while ≳8× cores keeps every slot busy and lets AQE rebalance. At
-    1000 executors × 8 cores this yields ≥ 64k partitions — the right
-    granularity for a 100 TB scan (each partition ~1.5 GB). Callers
-    that need pid-stable resume across differently-sized clusters
-    should pin num_partitions explicitly (or rely on store_meta, which
-    encode_job records and reuses).
+    It sets how finely rows are routed into chunk groups, and so the
+    upper bound on encode tasks, not the task count itself: a light
+    input (< 16 MB per pid) encodes on ~one task per chunk target of
+    bytes (≥ cores), because every Python task costs a fixed ~0.3 s
+    of worker CPU (encode.encode_dataframe). A heavy input runs on the
+    AQE-coalesced pid exchange, where ≳8× cores pids keep every slot
+    busy (the r3 sweep, BENCH_r03: 133→194 MB/s monotone in pid count
+    at local[32]; with N ≈ cores one slow pid serializes the tail). At
+    1000 executors × 8 cores this yields ≥ 64k pids — ~1.5 GB each for
+    a 100 TB scan. Callers that need pid-stable resume across
+    differently-sized clusters should pin num_partitions explicitly
+    (or rely on store_meta, which encode_job records and reuses).
     """
     cores = spark.sparkContext.defaultParallelism or 4
     return max(floor, factor * cores)

@@ -23,8 +23,10 @@ Everything is numpy-vectorized:
   escape/literal), then symbol bytes are scattered with ragged-arange
   gathers from a fixed 8-byte-stride symbol buffer.
 
-The symbol table is built greedily from a bounded sample (the only
-Python loop, capped at SAMPLE_CAP bytes) scoring count×(len-1).
+* symbol table — built greedily from a bounded sample (SAMPLE_CAP
+  bytes) scoring count×(len-1): every k-gram is counted by np.unique
+  over big-endian uint64 keys and ranked by np.lexsort; Python touches
+  only the ≤ 512 top grams and the ≤ 255 symbols it returns.
 
 This is the string-side analogue of the reference's zstd block
 compression (reference src/sink.rs:130-135), but per-column and
@@ -32,8 +34,6 @@ random-access-friendly.
 """
 
 from __future__ import annotations
-
-from collections import Counter
 
 import numpy as np
 
@@ -44,36 +44,79 @@ SAMPLE_CAP = 1 << 15  # 32 KiB symbol-learning sample
 
 
 def build_symbol_table(sample: bytes, max_symbols: int = MAX_SYMBOLS) -> list[bytes]:
-    """Greedy frequency × (len-1) symbol selection over a bounded sample."""
-    sample = sample[:SAMPLE_CAP]
-    n = len(sample)
+    """Greedy frequency × (len-1) symbol selection over a bounded sample.
+
+    Counts every k-gram (k = 2..8) at stride 1 (stride 2 past 8 KiB),
+    scores count × (k-1) for grams seen more than once, keeps the 3
+    lengths with the most gain among the 512 best grams, and fills the
+    table best-first, then with the most frequent single bytes.
+
+    Vectorized: each k-gram is packed big-endian into a uint64, so
+    integer order within one length IS the bytes order, and
+    ``np.unique`` counts all of them. Only the best ``max(512,
+    max_symbols)`` grams per length are ranked across lengths by
+    ``(-gain, bytes)``: the global top 512, and the head of any
+    length-filtered list, are always inside those per-length heads.
+    Single-byte ties go to the byte seen first (the order
+    ``collections.Counter.most_common`` gives).
+    """
+    arr = np.frombuffer(sample, dtype=np.uint8)[:SAMPLE_CAP]
+    n = len(arr)
     if n == 0:
         return []
-    counts: Counter = Counter()
-    mv = memoryview(sample)
-    for k in range(2, MAX_SYM_LEN + 1):
-        if n < k:
-            break
-        step = 1 if n <= 8192 else 2  # stride sampling keeps the loop bounded
-        for i in range(0, n - k + 1, step):
-            counts[bytes(mv[i : i + k])] += 1
-    # gain of a multi-byte symbol ≈ (len-1) bytes saved per occurrence
-    scored = [(cnt * (len(s) - 1), s) for s, cnt in counts.items() if cnt > 1]
-    scored.sort(key=lambda t: (-t[0], t[1]))
+    step = 1 if n <= 8192 else 2  # stride sampling keeps the count bounded
+    head = max(512, max_symbols)
+    # 8-byte big-endian window at every position (zero-padded tail);
+    # the k-gram at i is its top k bytes
+    padded = np.zeros(n + MAX_SYM_LEN - 1, dtype=np.uint64)
+    padded[:n] = arr
+    win = np.zeros(n, dtype=np.uint64)
+    for j in range(MAX_SYM_LEN):
+        win |= padded[j : j + n] << np.uint64(8 * (MAX_SYM_LEN - 1 - j))
+    gains = [np.zeros(0, dtype=np.int64)]
+    keys = [np.zeros(0, dtype=np.uint64)]
+    lens = [np.zeros(0, dtype=np.int64)]
+    n_scored: dict[int, int] = {}  # grams with count > 1, per length
+    for k in range(2, min(n, MAX_SYM_LEN) + 1):
+        shift = np.uint64(8 * (MAX_SYM_LEN - k))
+        uniq, cnt = np.unique(win[: n - k + 1 : step] >> shift, return_counts=True)
+        rep = cnt > 1
+        # gain of a multi-byte symbol ≈ (k-1) bytes saved per occurrence
+        uniq, gain = uniq[rep], cnt[rep].astype(np.int64) * (k - 1)
+        n_scored[k] = len(uniq)
+        top = np.lexsort((uniq, -gain))[:head]  # by (-gain, gram)
+        gains.append(gain[top])
+        keys.append(uniq[top] << shift)  # left-aligned: orders like bytes
+        lens.append(np.full(len(top), k, dtype=np.int64))
+    gain, key, glen = np.concatenate(gains), np.concatenate(keys), np.concatenate(lens)
+    # (-gain, bytes) order. A left-aligned key ties only with a longer
+    # gram that extends it by zero bytes, which bytes order puts after
+    # it; lexsort is stable and the heads are concatenated by length.
+    order = np.lexsort((key, -gain))
     # cap distinct multi-byte lengths to the 3 most productive: encode
     # matching costs one vector pass per distinct length, and the tail
     # lengths contribute little coverage
     by_len_gain: dict[int, int] = {}
-    for gain, s in scored[:512]:
-        by_len_gain[len(s)] = by_len_gain.get(len(s), 0) + gain
-    kept_lengths = set(sorted(by_len_gain, key=by_len_gain.get, reverse=True)[:3])
-    scored = [(g, s) for g, s in scored if len(s) in kept_lengths]
-    table = [s for _, s in scored[: max_symbols - 64]]
+    for k, g in zip(glen[order[:512]].tolist(), gain[order[:512]].tolist()):
+        by_len_gain[k] = by_len_gain.get(k, 0) + g
+    kept_lengths = sorted(by_len_gain, key=by_len_gain.get, reverse=True)[:3]
+    # the multi-byte part is the first `max_symbols - 64` of ALL kept
+    # grams (a negative bound slices from the end, so it needs the
+    # full count, not just the candidates)
+    n_multi = len(range(sum(n_scored[k] for k in kept_lengths))[: max_symbols - 64])
+    kept = order[np.isin(glen[order], kept_lengths)][: min(n_multi, max_symbols)]
+    table = [
+        int(v).to_bytes(8, "big")[:k]
+        for v, k in zip(key[kept].tolist(), glen[kept].tolist())
+    ]
     # single-byte symbols for the most frequent bytes: turns would-be
     # 2-byte escapes into 1-byte codes
-    byte_counts = Counter(sample)
-    for b, _ in byte_counts.most_common(min(64, max_symbols - len(table))):
-        table.append(bytes([b]))
+    n_bytes = min(64, max_symbols - n_multi)
+    if n_bytes > 0:
+        seen, first = np.unique(arr, return_index=True)
+        counts = np.bincount(arr)[seen]
+        by_count = seen[np.lexsort((first, -counts))]
+        table.extend(bytes([b]) for b in by_count[:n_bytes].tolist())
     return table[:max_symbols]
 
 

@@ -96,7 +96,7 @@ def bounded_bucket_pairs(
     bucket (every caller emits one row per (member, band)), which
     makes the sort order — and thus the chain — deterministic.
     """
-    from ..config import derive_shuffle_partitions
+    from ..config import aqe_enabled, derive_shuffle_partitions
 
     # r7: establish the bucket partitioning EXPLICITLY at a count past
     # the bypass-merge threshold. The window/groupBy below requires
@@ -121,12 +121,7 @@ def bounded_bucket_pairs(
     # creates it at initialPartitionNum → sort writer, byte-right read
     # tasks; a fixed 301 paid ~240 near-empty distinct tasks at
     # sf0.1). Non-AQE sessions pin it past the bypass threshold.
-    try:
-        aqe = banded.sparkSession.conf.get(
-            "spark.sql.adaptive.enabled", "true") == "true"
-    except Exception:  # noqa: BLE001
-        aqe = True
-    if aqe and not _FORCE_EXPLICIT_EXCHANGE:
+    if aqe_enabled(banded.sparkSession) and not _FORCE_EXPLICIT_EXCHANGE:
         def _pair_out(pairs_df: DataFrame) -> DataFrame:
             return pairs_df
     else:

@@ -6,10 +6,11 @@ src/sink.rs:100-106 size-driven batch cut, src/sink.rs:145-169
 partitioned layout):
 
   df.withColumn(pid, pmod(xxhash64(key), N))      # deterministic demux
-    .repartition(N, pid)                          # one shuffle, AQE-safe
+    .repartition(T, pid)                          # one shuffle, AQE-safe
     .mapInArrow(encode_fn, CHUNKS_ARROW_SCHEMA)   # vectorized, JVM↔Arrow
 
-The unit of parallelism is the partition (the reference's blob); the
+The unit of routing is the partition id (the reference's blob); a task
+encodes one or more pids (T ≤ N, sized by bytes); the
 unit of output is the (partition_id, chunk_seq) chunk group, cut when
 accumulated Arrow bytes reach `target_chunk_bytes` — the reference's
 `finish_batch` / 500 MB file-rotation twins (src/sink.rs:75-94).
@@ -31,6 +32,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..config import aqe_enabled
 from ..functions.codecs import decode_array, encode_array
 
 PID_COL = "__pid__"
@@ -118,13 +120,6 @@ def _exchange_buckets(spark, num_partitions: int) -> int:
 SPREAD_MIN_BYTES_PER_PID = 16 << 20
 
 
-def _aqe_enabled(spark) -> bool:
-    try:
-        return spark.conf.get("spark.sql.adaptive.enabled", "true") == "true"
-    except Exception:  # noqa: BLE001
-        return True
-
-
 def _plan_size_estimate(df: DataFrame) -> int | None:
     """Catalyst's optimized-plan size estimate (exact for cached
     relations and file scans, heuristic after transforms); None when
@@ -181,6 +176,17 @@ def _chunk_stats(col) -> tuple[str | None, str | None]:
     return str(lo), str(hi)
 
 
+def temporal_literal(val, t: pa.DataType) -> pa.Scalar:
+    """A filter literal as timestamp/date type ``t``, the form both the
+    zone maps (``.value``: the raw int _chunk_stats stores) and the
+    worker row filter compare in. An int is ``t``'s raw unit (µs since
+    the epoch for Spark timestamps, days for dates); a datetime, date
+    or ISO string is cast (a naive datetime reads as UTC)."""
+    if isinstance(val, int):
+        return pa.scalar(val, type=t)
+    return pa.scalar(val).cast(t)
+
+
 def _encode_group(
     pid: int,
     seq: int,
@@ -189,11 +195,15 @@ def _encode_group(
     zstd_level: int = 3,
     bloom_cols: tuple[str, ...] = (),
 ) -> pa.RecordBatch:
-    tbl = pa.concat_tables(tables).combine_chunks()
+    tbl = pa.concat_tables(tables)  # zero-copy: columns stay chunked
     n = tbl.num_rows
     rows = {k: [] for k in CHUNKS_ARROW_SCHEMA.names}
     for idx, name in enumerate(tbl.column_names):
-        col = tbl.column(name)  # encode_array collapses chunked columns
+        # combine one column at a time, not the whole table up front:
+        # the group's peak memory is its input plus ONE combined column
+        col = tbl.column(name)
+        if col.num_chunks > 1:
+            col = pa.chunked_array([col.combine_chunks()], type=col.type)
         codec_name, params, payload = encode_array(
             col, (codecs or {}).get(name), zstd_level
         )
@@ -223,6 +233,17 @@ def _encode_group(
     )
 
 
+def _as_sent(tbl: pa.Table) -> pa.Table:
+    """``tbl`` as an Arrow IPC stream carries it, the form the JVM sends
+    batches in: no validity bitmap on a null-free (child) array.
+    Table.filter adds all-valid bitmaps, and bytes_in (nbytes) must not
+    depend on whether a pid shared its input batch with another pid."""
+    sink = pa.BufferOutputStream()
+    with pa.ipc.new_stream(sink, tbl.schema) as writer:
+        writer.write_table(tbl)
+    return pa.ipc.open_stream(sink.getvalue()).read_all()
+
+
 def make_encode_fn(
     codecs: dict[str, str] | None,
     target_chunk_bytes: int,
@@ -232,9 +253,9 @@ def make_encode_fn(
 ):
     """Arrow-batch iterator transform for mapInArrow.
 
-    A task may receive several partition_ids (hash collisions after
-    repartition); groups are accumulated separately and cut
-    independently at the byte target.
+    A task may receive several partition_ids (a light encode sizes its
+    tasks by bytes, and pid hashes collide); groups are accumulated
+    separately and cut independently at the byte target.
 
     `progress` is an optional pyspark Accumulator of rows encoded —
     the reference's global element counter (src/util.rs:17-18,
@@ -271,7 +292,7 @@ def make_encode_fn(
                 st["tables"], st["bytes"] = [], 0
                 st["seq"] += 1
 
-        for batch in batches:
+        def route(batch: pa.RecordBatch):
             tbl = pa.Table.from_batches([batch])
             pid_arr = tbl.column(PID_COL)
             # layout-helper columns (pid routing, z-order sort value)
@@ -285,12 +306,17 @@ def make_encode_fn(
             uniq = pc.unique(pid_arr)
             for pid_scalar in uniq:
                 pid = pid_scalar.as_py()
-                # fast path: single-pid batch (the common case after
-                # repartition by pid) — no filter scan needed
-                sub = data if len(uniq) == 1 else data.filter(
-                    pc.equal(pid_arr, pid_scalar)
+                # fast path: single-pid batch — no filter scan needed
+                sub = data if len(uniq) == 1 else _as_sent(
+                    data.filter(pc.equal(pid_arr, pid_scalar))
                 )
                 yield from feed(pid, sub)
+
+        for batch in batches:
+            yield from route(batch)
+        # a multi-pid batch was copied into its pids' groups by the
+        # filter: drop the last one before the final flush
+        batch = None
         for pid, st in acc.items():
             if st["tables"]:
                 yield _encode_group(pid, st["seq"], st["tables"], codecs, zstd_level, bloom_cols)
@@ -318,9 +344,11 @@ def encode_dataframe(
     If df already carries PID_COL (e.g. from partitioning.salted_pids)
     it is used as-is; otherwise pid = pmod(xxhash64(key_col), N).
 
-    num_partitions=None derives ≥ 8× cores (config.derive_num_partitions
-    — the r3 sweep's task-granularity lesson as the default, not a
-    footnote). Pin it explicitly when pids must stay stable across
+    num_partitions is the number of pid VALUES (None derives ≥ 8×
+    cores, config.derive_num_partitions). It fixes which rows share a
+    chunk group, not how many tasks encode them: a light input runs
+    on about one task per chunk target of bytes (see the routing
+    below). Pin it explicitly when pids must stay stable across
     differently-sized clusters (resumable stores record it in
     store_meta and encode_job reuses that).
 
@@ -355,18 +383,30 @@ def encode_dataframe(
         # on encode_lineitem). Rows of one pid always land in exactly
         # one task: AQE coalescing merges whole reducer buckets, never
         # splits one. Fixed-N spread is the non-AQE fallback.
-        if _aqe_enabled(df.sparkSession):
+        if aqe_enabled(df.sparkSession):
             routed = with_pid.repartition(PID_COL)
         else:
             routed = with_pid.repartition(
                 _exchange_buckets(df.sparkSession, num_partitions), PID_COL
             )
     else:
-        # small per-pid work: the fixed-N exchange is cheapest — the
-        # AQE shape's map-side 1024-bucket writer + planning rounds
-        # cost more than they save (sf1 A/B: events 1.08 s fixed vs
-        # 2.18 s spread; docs roundtrip 0.95 vs 1.18 full-AQE)
-        routed = with_pid.repartition(num_partitions, PID_COL)
+        # light per-pid work: a fixed-N exchange is cheapest — the AQE
+        # shape's map-side 1024-bucket writer + planning rounds cost
+        # more than they save (sf1 A/B: events 1.08 s fixed vs 2.18 s
+        # spread; docs roundtrip 0.95 vs 1.18 full-AQE). N follows the
+        # input BYTES, not the pid count: every python task costs
+        # ~0.3 s of worker CPU whatever its data (CLAUDE.md), so one
+        # task per pid spent most of a small encode on task setup
+        # (identity mapInArrow over the pages bench input, local[4]:
+        # 0.53 s at 4 tasks, 2.8 s at 32). About one chunk target of input per
+        # task, at least one task per core, at most one per pid; the
+        # pid values and so every chunk group are unchanged, a task
+        # just encodes several pids (encode_fn keeps them apart).
+        tasks = num_partitions
+        if est is not None:
+            cores = df.sparkSession.sparkContext.defaultParallelism or 4
+            tasks = min(num_partitions, max(cores, -(-est // target_chunk_bytes)))
+        routed = with_pid.repartition(tasks, PID_COL)
     if sort_cols:
         routed = routed.sortWithinPartitions(PID_COL, *sort_cols)
     return routed.mapInArrow(
@@ -493,6 +533,11 @@ def make_decode_fn(field_names: list[str], row_filter=None):
                 idx = name_to_idx[col]
                 if idx not in decoded:
                     decoded[idx] = decode_array(*by_idx[idx][:3])
+                t = decoded[idx].type
+                if pa.types.is_timestamp(t) or pa.types.is_date(t):
+                    # pyarrow has no timestamp-vs-int64 (or naive-vs-
+                    # zoned) comparison: compare in the column's type
+                    val = temporal_literal(val, t)
                 m = getattr(pc, _FILTER_OPS[op])(decoded[idx], val)
                 mask = m if mask is None else pc.and_kleene(mask, m)
             mask = pc.fill_null(mask, False)  # SQL WHERE: null → drop

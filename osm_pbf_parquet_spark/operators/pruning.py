@@ -347,20 +347,48 @@ def prune_where(
     (decode_dataframe's row_filter does exactly that)."""
     for col, op, val in conjuncts:
         numeric = isinstance(val, (int, float)) and not isinstance(val, bool)
+        stat = val
+        t = _temporal_type(col, val, schema)
+        if t is not None:
+            # a temporal zone map stores the raw int (µs / days):
+            # compare ints, never the stat string cast to a timestamp
+            from .encode import temporal_literal
+
+            stat, numeric = temporal_literal(val, t).value, True
         if op == "==":
             if schema is not None or isinstance(val, str):
                 chunks_df = prune_by_point(
                     chunks_df, col, val, value_type=schema
                 )
             chunks_df = prune_by_range(
-                chunks_df, col, lower=val, upper=val, numeric=numeric
+                chunks_df, col, lower=stat, upper=stat, numeric=numeric
             )
         elif op in ("<", "<="):
             chunks_df = prune_by_range(
-                chunks_df, col, upper=val, numeric=numeric
+                chunks_df, col, upper=stat, numeric=numeric
             )
         elif op in (">", ">="):
             chunks_df = prune_by_range(
-                chunks_df, col, lower=val, numeric=numeric
+                chunks_df, col, lower=stat, numeric=numeric
             )
     return chunks_df
+
+
+def _temporal_type(col: str, val, schema: T.StructType | None):
+    """The arrow type a conjunct's literal compares as when the column
+    (per the schema) or, schema-less, the literal is a timestamp/date;
+    None otherwise."""
+    import datetime
+
+    import pyarrow as pa
+
+    if schema is not None and col in schema.names:
+        dt = schema[col].dataType
+        if isinstance(dt, (T.TimestampType, T.TimestampNTZType, T.DateType)):
+            from pyspark.sql.pandas.types import to_arrow_type
+
+            return to_arrow_type(dt)
+        return None
+    if isinstance(val, (datetime.date, datetime.datetime)):
+        return pa.scalar(val).type
+    return None

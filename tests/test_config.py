@@ -66,3 +66,29 @@ def test_zstd_level_through_spark(spark, sf_dir):
         dec = decode_dataframe(ch, src.schema)
         assert dec.count() == src.count()
     assert sizes[19] <= sizes[1]
+
+
+def test_malformed_decode_task_bytes_names_the_variable(monkeypatch, spark):
+    from osm_pbf_parquet_spark.config import derive_decode_task_bytes
+
+    monkeypatch.setenv("SPARK_GRAFT_DECODE_TASK_BYTES", "8MB")
+    with pytest.raises(ValueError, match="SPARK_GRAFT_DECODE_TASK_BYTES"):
+        derive_decode_task_bytes(spark)
+    monkeypatch.setenv("SPARK_GRAFT_DECODE_TASK_BYTES", "4096")
+    assert derive_decode_task_bytes(spark) == 4096
+
+
+@pytest.mark.parametrize("value,expect", [("TRUE", True), ("True", True),
+                                          ("false", False), ("FALSE", False)])
+def test_aqe_enabled_reads_the_flag_case_insensitively(spark, value, expect):
+    """Spark parses boolean confs case-insensitively; the engine's routing
+    (encode's pid exchange, dedup's pair exchange) must read them alike."""
+    from osm_pbf_parquet_spark.config import aqe_enabled
+
+    key = "spark.sql.adaptive.enabled"
+    before = spark.conf.get(key)
+    spark.conf.set(key, value)
+    try:
+        assert aqe_enabled(spark) is expect
+    finally:
+        spark.conf.set(key, before)

@@ -200,3 +200,40 @@ def test_sorted_encode_makes_zone_maps_selective(spark, sf_dir):
         r["event_id"] for r in expected.collect()
     )
     chunks.unpersist()
+
+
+def test_read_encoded_where_on_timestamp_counts_exactly(spark, pages_path, tmp_path):
+    """`where` on a timestamp column, with datetime or int (µs since the
+    epoch) literals: the zone maps compare the stored µs ints and the
+    worker row filter compares in the column's own type, so a warc_ts
+    window counts exactly — before, a datetime literal failed in the
+    zone map (CAST_INVALID_INPUT) and an int literal in the row filter
+    (no timestamp[us] vs int64 comparison)."""
+    import datetime
+
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from osm_pbf_parquet_spark.plans.manifest import encode_job, read_encoded
+
+    ts = np.sort(pq.read_table(pages_path).column("warc_ts").cast(pa.int64()).to_numpy())
+    lo, hi = int(ts[len(ts) * 2 // 5]), int(ts[len(ts) * 9 // 20])
+    expected = int(((ts >= lo) & (ts < hi)).sum())
+    assert 0 < expected < len(ts)
+
+    src = spark.read.parquet(pages_path)
+    out = str(tmp_path / "store")
+    encode_job(spark, src, out, key_col="url", num_partitions=4)
+
+    def as_dt(us: int) -> datetime.datetime:
+        return datetime.datetime(1970, 1, 1) + datetime.timedelta(microseconds=us)
+
+    def count(where) -> int:
+        return read_encoded(spark, out, src.schema, where=where).count()
+
+    assert count([("warc_ts", ">=", as_dt(lo)), ("warc_ts", "<", as_dt(hi))]) == expected
+    assert count([f"warc_ts >= {lo}", f"warc_ts < {hi}"]) == expected
+    assert count([("warc_ts", "==", as_dt(lo))]) == int((ts == lo).sum())
+    # a window past the data: the zone maps drop every group, nothing decodes
+    assert count([("warc_ts", ">", as_dt(int(ts[-1])))]) == 0

@@ -372,3 +372,27 @@ def test_ivf_probe_missing_manifest_is_clear_error(spark, tmp_path):
         json.dump([[1.0, 0.0], [0.0, 1.0]], f)
     with pytest.raises(FileNotFoundError, match="no committed manifest"):
         ivf_probe_chunks(spark, out, [1.0, 0.0], n_probe=1)
+
+
+def test_planted_dups_are_disjoint_real_pairs():
+    """tools/gen_scale_data.py plants exact-dup pairs: every pair must
+    copy a DIFFERENT doc and none may overwrite an earlier pair, so the
+    realized dup rate is the intended one (10 docs, 5 pairs: the old
+    draw-and-copy loop self-copied or overwrote almost surely)."""
+    import importlib.util
+    import os
+
+    import numpy as np
+
+    path = os.path.join(os.path.dirname(__file__), "..", "tools", "gen_scale_data.py")
+    spec = importlib.util.spec_from_file_location("gen_scale_data", path)
+    gen = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(gen)
+
+    for seed in range(20):
+        texts = [f"doc {i}" for i in range(10)]
+        pairs = gen.plant_exact_dups(texts, 5, np.random.default_rng(seed))
+        assert len(pairs) == 5
+        assert all(a != b and texts[a] == texts[b] for a, b in pairs)
+        assert len({i for p in pairs for i in p}) == 10
+        assert len(set(texts)) == 5

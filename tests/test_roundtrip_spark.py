@@ -154,3 +154,58 @@ def test_input_partition_mode_roundtrip_no_shuffle(spark, pages_path, tmp_path):
     assert "Exchange" not in plan, plan
     dec = decode_dataframe(chunks, src.schema)
     _assert_bit_identical(spark, src, dec, "url")
+
+
+def test_light_encode_width_follows_bytes(spark, pages_path):
+    """A light input (well under 16 MB per pid) encodes on about one task
+    per chunk target of input bytes, at least one per core, instead of
+    one per pid value — and its chunk rows are exactly those of one
+    task per pid value (the previous routing), bytes_in included."""
+    from osm_pbf_parquet_spark.operators.encode import (
+        CHUNKS_SPARK_SCHEMA,
+        PID_COL,
+        _plan_size_estimate,
+        make_encode_fn,
+        with_partition_id,
+    )
+
+    src = spark.read.parquet(pages_path).cache()
+    src.count()
+    n, target = 32, 1 << 20
+    est = _plan_size_estimate(src)
+    cores = spark.sparkContext.defaultParallelism
+    tasks = min(n, max(cores, -(-est // target)))
+    assert cores <= tasks < n  # the byte-sized width is not the pid count
+
+    sc = spark.sparkContext
+    sc.setJobGroup("light-encode-width", "light encode width")
+    try:
+        got = encode_dataframe(
+            src, key_col="url", num_partitions=n, target_chunk_bytes=target,
+            bloom_cols=["url"],
+        ).collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    tracker = sc.statusTracker()
+    stage_tasks = [
+        tracker.getStageInfo(sid).numTasks
+        for jid in tracker.getJobIdsForGroup("light-encode-width")
+        for sid in tracker.getJobInfo(jid).stageIds
+        if tracker.getStageInfo(sid) is not None
+    ]
+    assert tasks in stage_tasks, (tasks, stage_tasks)
+    assert n not in stage_tasks, stage_tasks
+
+    per_pid = (
+        with_partition_id(src, "url", n)
+        .repartition(n, PID_COL)
+        .mapInArrow(make_encode_fn(None, target, bloom_cols=("url",)),
+                    CHUNKS_SPARK_SCHEMA)
+        .collect()
+    )
+    src.unpersist()
+
+    got, per_pid = sorted(map(tuple, got)), sorted(map(tuple, per_pid))
+    assert len(got) == 5 * n  # one group per pid: no cuts at this target
+    assert len({r[:3] for r in got}) == len(got)  # (pid, seq, col) unique
+    assert got == per_pid

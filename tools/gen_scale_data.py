@@ -28,6 +28,27 @@ SRC = "/root/testdata/sf0.1"
 COPIES = 10
 
 
+def plant_exact_dups(texts: list, n_pairs: int, rng) -> list[tuple[int, int]]:
+    """Copy texts[a] over texts[b] for n_pairs disjoint (a, b) pairs.
+
+    A draw with a == b, or touching a doc an earlier pair used, is
+    redrawn: a self-copy plants nothing, and overwriting either side of
+    a planted pair breaks it, so the realized dup rate would fall short.
+    """
+    if 2 * n_pairs > len(texts):
+        raise ValueError(f"{n_pairs} disjoint pairs need {2 * n_pairs} docs")
+    used: set[int] = set()
+    pairs = []
+    while len(pairs) < n_pairs:
+        a, b = (int(x) for x in rng.integers(0, len(texts), 2))
+        if a == b or a in used or b in used:
+            continue
+        texts[b] = texts[a]
+        used.update((a, b))
+        pairs.append((a, b))
+    return pairs
+
+
 def main() -> int:
     out = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata_scale/sf1"
     os.makedirs(out, exist_ok=True)
@@ -79,11 +100,7 @@ def main() -> int:
         for k in word_counts
     ]
     # ~0.3% planted exact dups (sf0.1: 16 dup rows / 5000)
-    n_dup = int(round(n_docs * 16 / 5000 / 2))
-    for i in range(n_dup):
-        a = int(rng.integers(0, n_docs))
-        b = int(rng.integers(0, n_docs))
-        texts[b] = texts[a]
+    plant_exact_dups(texts, int(round(n_docs * 16 / 5000 / 2)), rng)
     tbl = pa.table({
         "doc_id": pa.array(range(n_docs), type=pa.int64()),
         "text": pa.array(texts, type=pa.string()),
