@@ -74,9 +74,9 @@ def derive_decode_task_bytes(spark) -> int:
     is therefore the wrong unit for the decode co-location exchange —
     measured on a cached 64-group lineitem chunk table it folded a
     32 MB / 2.4M-row decode to ONE task (3.2 s vs 0.64 s at the 8 MB
-    target; tools/probe_decode_r07.py). 8 MB compressed ≈ 50 MB decoded
-    ≈ 100–300 ms of kernel per task — well above the ~5–10 ms python
-    task setup cost, well below straggler granularity.
+    target; one session per scale, local[32]). 8 MB compressed ≈ 50 MB
+    decoded ≈ 100–300 ms of kernel per task — well above the ~5–10 ms
+    python task setup cost, well below straggler granularity.
     Env-overridable via SPARK_GRAFT_DECODE_TASK_BYTES for corpora whose
     decode cost per byte is unusual (e.g. stored-uncompressed blobs).
     """

@@ -31,11 +31,6 @@ MERSENNE31 = (1 << 31) - 1
 #: See bounded_bucket_pairs.
 DEFAULT_MAX_BUCKET = 256
 
-#: measurement hook (tools/probe_*): force bounded_bucket_pairs'
-#: explicit past-bypass exchange shape even under AQE, so the two
-#: shapes can be A/B'd interleaved in one session on this noisy host.
-_FORCE_EXPLICIT_EXCHANGE = False
-
 
 def bounded_bucket_pairs(
     banded: DataFrame,
@@ -112,7 +107,7 @@ def bounded_bucket_pairs(
     # here is its pair-explosion OUTPUT (up to cap² per bucket), so at
     # 10× scale AQE folded a few-MB banded input to ~1 task and the
     # stage serialized (interleaved medians: minhash 4.8 s AQE-shape
-    # vs 2.6 s explicit; substring 3.0 vs 2.2 — probe_dedup_r07).
+    # vs 2.6 s explicit; substring 3.0 vs 2.2 — 10× corpus, local[32]).
     n_exch = derive_shuffle_partitions(banded.sparkSession)
     banded = banded.repartition(n_exch, *key_cols)
     # The PAIR side is the opposite regime: tiny rows, no fan-out, and
@@ -121,7 +116,7 @@ def bounded_bucket_pairs(
     # creates it at initialPartitionNum → sort writer, byte-right read
     # tasks; a fixed 301 paid ~240 near-empty distinct tasks at
     # sf0.1). Non-AQE sessions pin it past the bypass threshold.
-    if aqe_enabled(banded.sparkSession) and not _FORCE_EXPLICIT_EXCHANGE:
+    if aqe_enabled(banded.sparkSession):
         def _pair_out(pairs_df: DataFrame) -> DataFrame:
             return pairs_df
     else:

@@ -632,9 +632,9 @@ def decode_dataframe(
     # (64 MB default) — a target tuned for JVM row work, ~15× too
     # coarse for a python decode kernel whose input is COMPRESSED
     # chunk payload (decompress fan-out ~6× + Arrow ship of the full
-    # decoded width). Measured (tools/probe_decode_r07.py, cached
-    # 64-group lineitem chunk table): sf0.1 AQE folded the decode to
-    # one ~32 MB task → 3.2 s vs 0.64 s here; 10× scale AQE 4.4 s vs
+    # decoded width). Measured (one session per scale, local[32],
+    # cached 64-group lineitem chunk table): sf0.1 AQE folded the
+    # decode to one ~32 MB task → 3.2 s vs 0.64 s here; 10× AQE 4.4 s vs
     # 1.5 s here. Catalyst's size estimate is exact for cached
     # relations and file scans (the normal chunk-store feeds), so
     # N ≈ est / decode_task_target_bytes spawns only byte-justified

@@ -13,8 +13,9 @@ crashed run (written but never committed) are filtered out at read
 time by the manifest semi-join — the same visibility rule an Iceberg
 snapshot commit provides.
 
-Manifest writes are tiny (one row per partition) so they happen on the
-driver; at 100 TB with ~10⁵ partitions this is still < 10 MB.
+Manifest rows are tiny (one per partition) so they are built and
+written on the driver, from one payload-free read-back of the run's
+durable chunk rows; at 100 TB with ~10⁵ partitions this is < 10 MB.
 """
 
 from __future__ import annotations
@@ -583,7 +584,9 @@ def write_and_commit_run(
     the EXPLICIT winning-file list (a zombie task attempt's object
     flushed after the action cannot reach the commit) and the
     dead-attempt sweep runs after it; the JVM route's output committer
-    makes both steps a no-op."""
+    makes both steps a no-op. The read-back is one Spark job: a
+    toArrow collect of the run's payload-free rows, bounded by one row
+    per (chunk group, column) of this run, summarized on the driver."""
     wrote = write_chunk_table(
         spark, chunks, out_dir, max_records, run_id=run_id
     )
@@ -596,7 +599,7 @@ def write_and_commit_run(
         columns=SUMMARY_COLUMNS, files=files,
     ).filter(F.col("run_id") == run_id)
     rows = commit_summary(
-        summarize_chunks(written).collect(), out_dir, snapshot_id, run_id,
+        summarize_written(written.toArrow()), out_dir, snapshot_id, run_id,
         spark,
     )
     if wrote is not None:
@@ -608,70 +611,67 @@ def write_and_commit_run(
     return rows
 
 
-def summarize_chunks(written: DataFrame) -> DataFrame:
-    """Per-partition manifest aggregates from durable chunk rows.
+def summarize_written(tbl: pa.Table) -> list[dict]:
+    """Per-partition manifest aggregates, sorted by partition_id, from
+    durable chunk rows: an Arrow table of SUMMARY_COLUMNS, plus
+    ``__file`` for the file-level manifest (else files is None).
 
-    Codec map is last-chunk-wins per column (max_by chunk_seq) — the
-    auto-selector may legitimately choose different codecs for
-    different chunks of one partition, so keys must be deduped BEFORE
-    map_from_entries (Spark's default mapKeyDedupPolicy=EXCEPTION
-    would otherwise kill the job at commit time).
-    """
-    # n_rows/n_chunks come from the (partition_id, chunk_seq) grain via
-    # max(n_rows) per group — NOT from col_idx == 0 rows, so a
-    # column-filtered chunks feed still yields the true row count
-    # instead of silently committing 0.
-    per_group = written.groupBy("partition_id", "chunk_seq").agg(
-        F.max("n_rows").alias("gnr")
-    )
-    rows_per_pid = per_group.groupBy("partition_id").agg(
-        F.sum("gnr").alias("n_rows"), F.count("*").alias("n_chunks")
-    )
-    # collect_list audit (r6, the LSH-bucket hazard class): these two
-    # collects are BOUNDED BY CONSTRUCTION — one checksum per chunk of
-    # one (partition, column), i.e. partition_bytes/target_chunk_bytes
-    # entries (~hundreds), and one (column, codec) entry per column.
-    per_col = (
-        written.groupBy("partition_id", "column")
-        .agg(
-            F.max_by("codec", "chunk_seq").alias("codec"),
-            F.sum("bytes_in").alias("bi"),
-            F.sum("bytes_out").alias("bo"),
-            F.collect_list("checksum").alias("cks"),
+    n_rows is Σ over chunk_seq of max(n_rows) — the chunk-group grain,
+    NOT col_idx == 0 rows, so a column-filtered feed still counts the
+    true rows. The codec map is last-chunk-wins per column (the
+    auto-selector may pick different codecs per chunk). checksum =
+    sha256 of the sorted non-null chunk checksums joined by "|";
+    files = sorted bare chunk-file names (?query stripped, basename)."""
+    import hashlib
+
+    import pyarrow.compute as pc
+
+    pid = "partition_id"
+
+    def per_pid(t: pa.Table, aggs: list) -> list[dict]:
+        return t.group_by(pid).aggregate(aggs).sort_by(pid).to_pylist()
+
+    groups = tbl.group_by([pid, "chunk_seq"]).aggregate([("n_rows", "max")])
+    # "last" keeps input order only single-threaded: sort by chunk_seq
+    last = tbl.sort_by("chunk_seq").group_by(
+        [pid, "column"], use_threads=False
+    ).aggregate([("codec", "last", pc.ScalarAggregateOptions(
+        skip_nulls=False))])
+    aggs = [("bytes_in", "sum"), ("bytes_out", "sum"), ("checksum", "list")]
+    if "__file" in tbl.column_names:
+        bare = pc.replace_substring_regex(tbl["__file"], r"\?.*$", "")
+        tbl = tbl.append_column("files", pc.replace_substring_regex(
+            bare, r"^.*/", ""
+        ))
+        aggs.append(("files", "distinct"))
+    return [
+        {
+            pid: a[pid],
+            "n_rows": g["n_rows_max_sum"],
+            "n_chunks": g["chunk_seq_count"],
+            "bytes_in": a["bytes_in_sum"],
+            "bytes_out": a["bytes_out_sum"],
+            "codec_map": dict(zip(c["column_list"], c["codec_last_list"])),
+            "checksum": hashlib.sha256("|".join(sorted(
+                x for x in a["checksum_list"] if x is not None
+            )).encode()).hexdigest(),
+            "files": sorted(a["files_distinct"])
+            if "files_distinct" in a else None,
+        }
+        for a, g, c in zip(
+            per_pid(tbl, aggs),
+            per_pid(groups, [("n_rows_max", "sum"), ("chunk_seq", "count",
+                                                    pc.CountOptions("all"))]),
+            per_pid(last, [("column", "list"), ("codec_last", "list")]),
         )
-    )
-    per_pid = per_col.groupBy("partition_id").agg(
-        F.sum("bi").alias("bytes_in"),
-        F.sum("bo").alias("bytes_out"),
-        F.map_from_entries(
-            F.sort_array(F.collect_list(F.struct("column", "codec")))
-        ).alias("codec_map"),
-        F.sha2(
-            F.concat_ws("|", F.sort_array(F.flatten(F.collect_list("cks")))), 256
-        ).alias("checksum"),
-    )
-    out = per_pid.join(rows_per_pid, "partition_id")
-    if "__file" in written.columns:
-        # file-level manifest: BARE chunk-file names per partition
-        # (normalize the provenance URI — strip ?query config, take
-        # the basename; chunk files are flat under chunks/). Bounded:
-        # a partition spans a handful of rotated files.
-        bare = F.element_at(
-            F.split(F.element_at(F.split("__file", "\\?"), 1), "/"), -1
-        )
-        files_per_pid = (
-            written.select("partition_id", bare.alias("__bare"))
-            .groupBy("partition_id")
-            .agg(F.sort_array(F.collect_set("__bare")).alias("files"))
-        )
-        out = out.join(files_per_pid, "partition_id")
-    return out
+    ]
 
 
 def commit_summary(agg_rows, out_dir: str, snapshot_id: str, run_id: str,
                    spark: SparkSession | None = None) -> list[dict]:
-    """Build + atomically commit manifest rows from summarize_chunks
-    output — shared by encode_job and compact_partitions."""
+    """Build + atomically commit manifest rows from summarize_written
+    output — the commit step of write_and_commit_run (encode_job,
+    merge_job, compact_partitions)."""
     now = time.time()
     rows = [
         {
@@ -682,13 +682,11 @@ def commit_summary(agg_rows, out_dir: str, snapshot_id: str, run_id: str,
             "n_chunks": r["n_chunks"],
             "bytes_in": r["bytes_in"],
             "bytes_out": r["bytes_out"],
-            "codecs": json.dumps(dict(r["codec_map"]), sort_keys=True),
+            "codecs": json.dumps(r["codec_map"], sort_keys=True),
             "checksum": r["checksum"],
             "committed_at": now,
             "status": "done",
-            "files": (
-                json.dumps(list(r["files"])) if "files" in r else None
-            ),
+            "files": None if r["files"] is None else json.dumps(r["files"]),
         }
         for r in agg_rows
     ]

@@ -192,13 +192,11 @@ def read_chunks_pyarrow(
     sc = spark.sparkContext
     n = min(len(files), sc.defaultParallelism * 2)
     strided = [f for i in range(n) for f in files[i::n]]
-    # JVM LocalRelation, not sc.parallelize (r7): a python-RDD index
-    # makes every reader task run a SECOND python worker just to
-    # unpickle its slice of file names (~0.3 s/job of worker setup at
-    # local[32] measured on the identical PBF index shape); a
-    # LocalTableScan slices the strided list JVM-side with no python
-    # and no Exchange, and any contiguous re-slicing preserves the
-    # stride balance.
+    # createDataFrame over the strided list (same shape as
+    # read_osm_pbf): it plans as `Scan ExistingRDD` in
+    # defaultParallelism slices with no Exchange; its lineage still
+    # holds PySpark's identity PythonRDD. Any contiguous re-slicing
+    # preserves the stride balance.
     pdf = spark.createDataFrame([(f,) for f in strided], "path string")
     want = [
         CHUNKS_STORE_ARROW_SCHEMA.field(f.name) for f in store_fields

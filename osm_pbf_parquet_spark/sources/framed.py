@@ -117,11 +117,12 @@ def read_framed(
     n = num_partitions or min(
         len(idx), int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
     )
-    # stride-interleave + LocalRelation (r7, same shape as
+    # stride-interleave + createDataFrame (same shape as
     # read_osm_pbf): the old round-robin repartition(n) was a full
-    # Exchange stage of the index rows; LocalTableScan slices the
-    # driver-local list with no shuffle, and striding keeps any
-    # contiguous re-slicing balanced across the file's regions.
+    # Exchange stage of the index rows. The list plans as `Scan
+    # ExistingRDD` in defaultParallelism slices with no shuffle (see
+    # read_osm_pbf), and striding keeps any contiguous re-slicing
+    # balanced across the file's regions.
     rows = [(path, o, ln) for o, ln in idx]
     strided = [r for i in range(n) for r in rows[i::n]]
     index_df = spark.createDataFrame(

@@ -1786,23 +1786,22 @@ def read_osm_pbf(spark, path: str, num_partitions: int | None = None,
         from ..config import derive_num_partitions
 
         n = min(len(idx), derive_num_partitions(spark, factor=2, floor=8))
-    # driver-local index WITHOUT a python RDD (r7): sc.parallelize of
-    # python tuples makes the scan a PythonRDD stage, so every decode
-    # task ran TWO python workers — one unpickling its index slice,
-    # one for mapInArrow — and the extra worker's per-task setup was
-    # ~0.3 s of the measured ~0.9 s job wall at local[32] (SQL-tab
-    # 'time to initialize Python workers'). createDataFrame over the
-    # driver-local list builds a JVM LocalRelation instead: the scan
-    # is LocalTableScan (no python), sliced across
-    # leafNodeDefaultParallelism tasks with no Exchange. The list is
-    # still STRIDE-INTERLEAVED first (task t gets blobs t, t+n, …):
-    # element types cluster by file position (a planet file is a long
-    # dense-node run, then ways, then relations) and per-blob decode
-    # cost differs by type, so contiguous runs hand whole
+    # driver-local index through createDataFrame over a list. It plans
+    # as `Scan ExistingRDD`, not a LocalTableScan: its lineage keeps a
+    # PythonRDD (PySpark's identity re-serialization of the list)
+    # under SerDeUtil, and it splits into defaultParallelism tasks,
+    # not n (4 tasks for the 8 blobs of the perfbench PBF at
+    # local[4]). A `spark.range(len, numPartitions=n)` leaf has no
+    # PythonRDD but measured slower: read_osm_pbf into a noop went
+    # 0.636 → 0.710 s median, 8 tasks against 4 (4 vCPU, local[4]).
+    # The list is STRIDE-INTERLEAVED first (task t gets blobs t, t+n,
+    # …): element types cluster by file position (a planet file is a
+    # long dense-node run, then ways, then relations) and per-blob
+    # decode cost differs by type, so contiguous runs hand whole
     # way/relation regions to a few straggler tasks (measured 2x wall
     # on the mixed 13.2M fixture). Any contiguous re-slicing of the
     # strided list preserves the per-task type mix, so the exact
-    # LocalTableScan slice count does not matter.
+    # slice count does not matter.
     rows = [(path, o, ln) for o, ln in idx]
     strided = [r for i in range(n) for r in rows[i::n]]
     index_df = spark.createDataFrame(

@@ -30,26 +30,25 @@ def test_multi_snapshot_store_decodes_all_rows(spark, pages_path, tmp_path):
 
 def test_summarize_chunks_mixed_codecs_last_wins(spark):
     """A partition whose chunks picked different codecs for one column
-    must not kill the commit with DUPLICATED_MAP_KEY."""
-    from osm_pbf_parquet_spark.plans.manifest import summarize_chunks
+    must commit its last chunk's codec, once per column."""
+    import pyarrow as pa
+
+    from osm_pbf_parquet_spark.plans.manifest import summarize_written
 
     rows = [
         # (pid, seq, col_idx, column, codec, n_rows, bytes_in, bytes_out, checksum)
-        (0, 0, 0, "text", "str_fsst", 10, 100, 40, "aa"),
         (0, 1, 0, "text", "str_zstd", 12, 120, 30, "bb"),
+        (0, 0, 0, "text", "str_fsst", 10, 100, 40, "aa"),
         (0, 0, 1, "id", "bitpack", 10, 80, 10, "cc"),
         (0, 1, 1, "id", "bitpack", 12, 96, 12, "dd"),
     ]
-    written = spark.createDataFrame(
-        rows,
-        "partition_id long, chunk_seq long, col_idx int, column string,"
-        " codec string, n_rows long, bytes_in long, bytes_out long,"
-        " checksum string",
-    )
-    out = summarize_chunks(written).collect()
+    names = ["partition_id", "chunk_seq", "col_idx", "column", "codec",
+             "n_rows", "bytes_in", "bytes_out", "checksum"]
+    written = pa.Table.from_pylist([dict(zip(names, r)) for r in rows])
+    out = summarize_written(written)
     assert len(out) == 1
     r = out[0]
-    assert dict(r["codec_map"]) == {"text": "str_zstd", "id": "bitpack"}
+    assert r["codec_map"] == {"text": "str_zstd", "id": "bitpack"}
     assert r["n_rows"] == 22 and r["n_chunks"] == 2
     assert r["bytes_in"] == 396 and r["bytes_out"] == 92
 
@@ -147,19 +146,20 @@ def test_summarize_chunks_column_filtered_rows(spark):
     a column-filtered feed yields the true count instead of 0."""
     import pyspark.sql.functions as F
 
+    import pyarrow.compute as pc
+
     from osm_pbf_parquet_spark.operators.encode import encode_dataframe
-    from osm_pbf_parquet_spark.plans.manifest import summarize_chunks
+    from osm_pbf_parquet_spark.plans.manifest import summarize_written
 
     df = spark.range(0, 500).select(
         F.col("id").alias("k"), (F.col("id") * 3).alias("v")
     )
-    chunks = encode_dataframe(df, key_col="k", num_partitions=2).cache()
-    full = summarize_chunks(chunks).agg(F.sum("n_rows")).collect()[0][0]
+    chunks = encode_dataframe(df, key_col="k", num_partitions=2).toArrow()
+    full = sum(r["n_rows"] for r in summarize_written(chunks))
     # drop the col_idx==0 rows entirely: count must be unchanged
-    filtered = summarize_chunks(chunks.filter(F.col("col_idx") != 0))
-    part = filtered.agg(F.sum("n_rows")).collect()[0][0]
+    filtered = chunks.filter(pc.not_equal(chunks["col_idx"], 0))
+    part = sum(r["n_rows"] for r in summarize_written(filtered))
     assert full == 500 and part == 500
-    chunks.unpersist()
 
 
 def test_decode_rejects_colliding_runs_even_when_adjacent(spark):

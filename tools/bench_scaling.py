@@ -6,10 +6,11 @@ Workload: encode the deterministic 1M-row pages fixture (~1 GB of
 column bytes; FIXTURES.md F1 shape) with the string-heavy codecs
 forced (str_fsst for url/text, str_zstd for html) so per-partition
 compute dominates fixed job overhead — the regime a 100 TB cluster
-run is actually in. Round-3 profiling (tools/scaling_experiments.py +
-tools/kernel_ceiling.py) showed the old 300k-row fixture spent ~60%
-of its local[32] wall time in parallelism-independent overhead, so
-its 8→32 pair measured Amdahl's constant, not the engine.
+run is actually in. Round-3 profiling (the same job timed at each
+local[] level, plus tools/kernel_ceiling.py) showed the old 300k-row
+fixture spent ~60% of its local[32] wall time in parallelism-
+independent overhead, so its 8→32 pair measured Amdahl's constant,
+not the engine.
 
 Each parallelism level runs in a FRESH JVM; within a process the job
 runs once warm, then 2 timed runs (criterion-style warm timing,
@@ -39,8 +40,8 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 # compute-dominated regime: at 300k rows the job's ~1.6 s of
 # parallelism-independent overhead (shuffle setup, scheduling, task
 # tail) was ~60% of the local[32] wall time, so the 8→32 pair measured
-# Amdahl's constant, not the engine (round-3 profiling,
-# tools/scaling_experiments.py). A 100 TB run is minutes-per-task —
+# Amdahl's constant, not the engine (round-3 profiling of the same
+# job at local[8] and local[32]). A 100 TB run is minutes-per-task —
 # the big fixture is the honest proxy. Override with SCALING_ROWS.
 FIXTURE_ROWS = int(os.environ.get("SCALING_ROWS", "1000000"))
 FIXTURE = f"/tmp/pages_scaling_{FIXTURE_ROWS}.parquet"
@@ -49,7 +50,7 @@ _CHILD = r"""
 import json, os, sys, time
 sys.path.insert(0, %(repo)r)
 cpus = int(sys.argv[1])
-# experiment knobs (also used by tools/scaling_experiments):
+# experiment knobs:
 #   SCALING_PARTS  - engine partition count (default: the engine's own
 #                    derive_num_partitions = 8x cores, the r3 sweep's
 #                    task-granularity lesson promoted to the default —

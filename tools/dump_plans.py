@@ -1,6 +1,6 @@
 """Dump .explain('formatted') for the bench's hot queries.
 
-Usage: PYTHONPATH=<tree> python tools/dump_plans_r07.py <suffix> <outdir>
+Usage: PYTHONPATH=<tree> python tools/dump_plans.py <suffix> <outdir>
   <tree>    repo root whose engine code to plan against
   <suffix>  'before' (round-start tree) or 'after' (current tree)
 
@@ -23,7 +23,7 @@ def main() -> int:
 
     spark = (
         SparkSession.builder.master("local[4]")
-        .appName(f"r07-plans-{suffix}")
+        .appName(f"plans-{suffix}")
         .config("spark.sql.shuffle.partitions", "64")
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
@@ -77,7 +77,7 @@ def main() -> int:
     plans["bloom_lookup_decode"] = decode_dataframe(
         kept, docs.schema, row_filter=[("doc_id", "==", 42)]
     ).filter(F.col("doc_id") == 42)
-    # r7-touched queries added for the second half of the round
+    # similarity top-k and the PBF ingest
     from osm_pbf_parquet_spark.functions.similarity import cosine_topk
     from osm_pbf_parquet_spark.sources.pbf import (
         read_osm_pbf,
@@ -88,7 +88,7 @@ def main() -> int:
     emb = load("embeddings").cache()
     emb.count()
     plans["similarity_topk"] = cosine_topk(emb, entry_mod.QUERY_VEC, 10)
-    pbf_path = synthetic_osm_pbf("/tmp/plans_r07.osm.pbf", n_nodes=20_000)
+    pbf_path = synthetic_osm_pbf("/tmp/plans.osm.pbf", n_nodes=20_000)
     plans["pbf_ingest"] = read_osm_pbf(spark, pbf_path).agg(F.count("*"))
 
     for name, df in plans.items():
