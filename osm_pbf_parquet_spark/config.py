@@ -11,7 +11,6 @@ itself correctly from a laptop to a 1000-executor cluster.
 from __future__ import annotations
 
 import re
-from dataclasses import dataclass, field
 
 _UNITS = {"k": 1 << 10, "m": 1 << 20, "g": 1 << 30, "t": 1 << 40}
 MIN_CHUNK = 4 << 20
@@ -44,24 +43,6 @@ def derive_chunk_target(spark) -> int:
     except Exception:  # noqa: BLE001
         cores = spark.sparkContext.defaultParallelism or 4
     return max(MIN_CHUNK, min(MAX_CHUNK, mem // max(1, cores) // 8))
-
-
-@dataclass(frozen=True)
-class EncodeConfig:
-    """Frozen job config — the analogue of the reference's write-once
-    global Args (src/util.rs:14-15), carried by closure capture instead
-    of a process global."""
-
-    key_col: str = "url"
-    num_partitions: int = 32
-    target_chunk_bytes: int | None = None  # None → derive_chunk_target
-    zstd_level: int = 3  # reference default, src/util.rs:35-37
-    codecs: dict[str, str] | None = field(default=None)
-
-    def resolved_chunk_bytes(self, spark) -> int:
-        if self.target_chunk_bytes is not None:
-            return self.target_chunk_bytes
-        return derive_chunk_target(spark)
 
 
 def derive_decode_task_bytes(spark) -> int:

@@ -51,10 +51,6 @@ def bitpack_decode(params: dict, payload: bytes) -> np.ndarray:
     return add_wrap(u, params["min"])
 
 
-def bitpack_estimate(n: int, lo: int, hi: int) -> int:
-    return n * bits_needed((hi - lo) & 0xFFFFFFFFFFFFFFFF) // 8 + 48
-
-
 # -- delta: first value + zigzag deltas, bit-packed -------------------------
 
 def delta_encode(v: np.ndarray) -> tuple[dict, bytes]:
@@ -85,10 +81,6 @@ def delta_decode(params: dict, payload: bytes) -> np.ndarray:
     return out
 
 
-def delta_estimate(n: int, max_zigzag_delta: int) -> int:
-    return (n - 1) * bits_needed(max_zigzag_delta) // 8 + 48 if n else 48
-
-
 # -- RLE: run values (bit-packed FoR) + run lengths (bit-packed) ------------
 
 def rle_encode(v: np.ndarray) -> tuple[dict, bytes]:
@@ -115,12 +107,6 @@ def rle_decode(params: dict, payload: bytes) -> np.ndarray:
     return np.repeat(values, lengths)
 
 
-def rle_estimate(n_runs: int, lo: int, hi: int, max_run: int) -> int:
-    vw = bits_needed((hi - lo) & 0xFFFFFFFFFFFFFFFF)
-    lw = bits_needed(max_run)
-    return n_runs * (vw + lw) // 8 + 96
-
-
 # -- dict: first-occurrence dictionary + bit-packed codes -------------------
 
 def dict_int_encode(v: np.ndarray) -> tuple[dict, bytes]:
@@ -143,9 +129,3 @@ def dict_int_decode(params: dict, payload: bytes) -> np.ndarray:
     uniq = bitpack_decode(params["u"], ub)
     codes = unpack_uints(cb, params["cw"], params["n"])
     return uniq[codes.astype(np.int64)]
-
-
-def dict_int_estimate(n: int, card: int, lo: int, hi: int) -> int:
-    vw = bits_needed((hi - lo) & 0xFFFFFFFFFFFFFFFF)
-    cw = bits_needed(card - 1)
-    return card * vw // 8 + n * cw // 8 + 96

@@ -242,7 +242,6 @@ def ivf_build_store(
 
     Returns the centroid matrix (also persisted)."""
     import json
-    import os
 
     import numpy as np
 
@@ -285,23 +284,19 @@ def ivf_probe_chunks(spark, out_dir: str, query_vec: list[float],
     """(probed cell ids, committed chunk rows pruned to those cells).
     Exposed separately so tests can assert the scan's partition set."""
     import json
-    import os
 
     import numpy as np
 
-    from ..plans.manifest import read_committed_chunks, read_manifest
-
-    from ..plans.fsutil import has_scheme, read_bytes
-
-    from ..plans.manifest import store_path
+    from ..plans.fsutil import read_bytes
+    from ..plans.manifest import (
+        read_committed_chunks,
+        read_manifest,
+        store_path,
+    )
 
     cpath = store_path(out_dir, "ivf_centroids.json")
-    if has_scheme(out_dir):
-        cents = np.array(json.loads(read_bytes(spark, cpath).decode()),
-                         dtype=np.float64)
-    else:
-        with open(cpath) as f:
-            cents = np.array(json.load(f), dtype=np.float64)
+    cents = np.array(json.loads(read_bytes(spark, cpath).decode()),
+                     dtype=np.float64)
     q = np.array(query_vec, dtype=np.float64)
     qn = q / max(np.linalg.norm(q), 1e-12)
     order = np.argsort(-(cents @ qn))

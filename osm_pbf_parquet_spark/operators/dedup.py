@@ -239,12 +239,11 @@ def minhash_signatures(
     shingle strings are ever materialized, no shuffle happens at all
     (signatures are map-side; the first exchange of the LSH pipeline
     is the band-bucket groupBy). Docs shorter than k (incl.
-    null/empty) produce no signature row, matching the explode twin.
+    null/empty) produce no signature row.
 
     Design note (measured): three implementations of this stage —
-    r4's explode→32 codegen min-aggs (kept below as
-    ``minhash_signatures_exploded``), interpreted HOF transform +
-    array_min (~2× slower than explode, never shipped), and this
+    r4's explode→32 codegen min-aggs (since deleted), interpreted HOF
+    transform + array_min (~2× slower than explode, never shipped), and this
     kernel. At sf0.1 solo best-of-3, end-to-end minhash_lsh_pairs:
     explode 4.54 s / 299k candidate pairs → kernel 1.7 s / 248k pairs
     (2.6×, and BETTER precision after the fmix64 finalizer +
@@ -373,45 +372,6 @@ def _perm_constants(num_hashes: int):
     a = (z % (M - np.uint64(1)) + np.uint64(1)).astype(np.int64)
     b = ((z >> np.uint64(32)) % M).astype(np.int64)
     return a, b
-
-
-def minhash_signatures_exploded(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    num_hashes: int = 32,
-    shingle_k: int = 4,
-) -> DataFrame:
-    """The r4 explode→codegen-agg twin of ``minhash_signatures``, kept
-    for A/B measurement and as the pure-DataFrame reference plan.
-
-    Design note (measured, r4): a shuffle-free row-local formulation
-    (transform + array_min per permutation) produces bit-identical
-    signatures but runs ~2× SLOWER at sf0.1 — Spark higher-order
-    functions are interpreted per element, while this explode→agg
-    shape stays in codegen'd hash aggregation. It is also NOT a
-    shuffle saving: explode is row-local, so each doc's shingle rows
-    stay in their input partition and map-side partial aggregation
-    collapses them to ONE row per doc before the exchange — the
-    shuffle is already signature-sized, not shingle-sized. r5: the
-    mapInArrow rolling-hash kernel (see minhash_signatures) beats
-    this shape 2.8× end-to-end by never materializing shingle
-    strings at all."""
-    exploded = (
-        df.select(id_col, F.explode(_char_shingles(text_col, shingle_k)).alias("sh"))
-        .withColumn("h", F.pmod(F.xxhash64("sh"), F.lit(MERSENNE31)))
-    )
-    aggs = [
-        F.min(
-            F.pmod(F.col("h") * F.lit(2 * j + 1) + F.lit((j * 40503) % MERSENNE31),
-                   F.lit(MERSENNE31))
-        ).alias(f"mh{j}")
-        for j in range(num_hashes)
-    ]
-    sig = exploded.groupBy(id_col).agg(*aggs)
-    return sig.select(
-        id_col, F.array(*[f"mh{j}" for j in range(num_hashes)]).alias("sig")
-    )
 
 
 def minhash_lsh_pairs(

@@ -21,7 +21,6 @@ durable chunk rows; at 100 TB with ~10⁵ partitions this is < 10 MB.
 from __future__ import annotations
 
 import json
-import os
 import time
 import uuid
 
@@ -92,11 +91,9 @@ def store_path(out_dir: str, *parts: str) -> str:
     """Child path in the store — query-aware for URI stores (s3 URIs
     carry endpoint/credential config after '?', so naive f-string
     suffixing would append the child AFTER the query)."""
-    from .fsutil import has_scheme, join_uri
+    from .fsutil import join_uri
 
-    if has_scheme(out_dir):
-        return join_uri(out_dir, *parts)
-    return os.path.join(out_dir, *parts)
+    return join_uri(out_dir, *parts)
 
 
 def _manifest_dir(out_dir: str) -> str:
@@ -132,10 +129,11 @@ def read_chunks(
     ``with_file`` adds the source file as a ``__file`` column (vacuum's
     provenance need) — input_file_name() on the JVM path, the reader's
     own path on the pyarrow (s3) path, where input_file_name() cannot
-    see through mapInArrow. ``run_id`` is a read-back pushdown HINT:
-    the pyarrow path prunes parquet row groups with it (Catalyst does
-    the equivalent for the JVM path from the caller's .filter);
-    callers must still filter — the hint only skips IO."""
+    see through mapInArrow. ``run_id`` keeps only that run's rows,
+    pushed into the parquet scan on both routes: on the JVM path the
+    filter goes in BEFORE input_file_name(), which is
+    nondeterministic and would otherwise stop Catalyst pushing it
+    down (every commit would read every run's metadata)."""
     from .fsutil import uses_pyarrow
 
     if uses_pyarrow(out_dir):
@@ -159,6 +157,8 @@ def read_chunks(
             df = reader.parquet(*[join_uri(cdir, n) for n in files])
     else:
         df = reader.parquet(cdir)
+    if run_id is not None:
+        df = df.filter(F.col("run_id") == run_id)
     if with_file:
         df = df.withColumn("__file", F.input_file_name())
     if columns is not None:
@@ -204,19 +204,12 @@ STORE_FORMAT_VERSION = 2  # v2 = chunk schema with stat_bloom
 
 
 def read_store_meta(out_dir: str, spark: SparkSession | None = None) -> dict | None:
-    from .fsutil import exists, has_scheme, read_bytes
+    from .fsutil import exists, read_bytes
 
     path = store_path(out_dir, STORE_META_FILE)
-    if has_scheme(out_dir):
-        if spark is None:
-            raise ValueError("URI store paths need the spark session")
-        if not exists(spark, path):
-            return None
-        return json.loads(read_bytes(spark, path).decode())
-    if not os.path.exists(path):
+    if not exists(spark, path):
         return None
-    with open(path) as f:
-        return json.load(f)
+    return json.loads(read_bytes(spark, path).decode())
 
 
 def write_store_meta(
@@ -224,15 +217,10 @@ def write_store_meta(
 ) -> None:
     """First-commit-wins store identity (temp+rename, never rewritten):
     records the routing contract every later writer must repeat."""
-    from .fsutil import exists, has_scheme, write_sidecar
+    from .fsutil import exists, write_sidecar
 
     path = store_path(out_dir, STORE_META_FILE)
-    if has_scheme(out_dir):
-        if spark is None:
-            raise ValueError("URI store paths need the spark session")
-        if exists(spark, path):
-            return
-    elif os.path.exists(path):
+    if exists(spark, path):
         return
     write_sidecar(spark, path, json.dumps(meta, sort_keys=True).encode())
 
@@ -293,29 +281,24 @@ def _read_manifest_raw(
     """Every committed manifest row, NO last-wins dedup — the shared
     raw scan behind read_manifest and compact_manifest. None when no
     manifest exists yet."""
-    from .fsutil import has_scheme, uses_pyarrow
+    from .fsutil import uses_pyarrow
 
-    mdir = _manifest_dir(out_dir)
+    parts = _list_manifest_parts(spark, out_dir)
+    if not parts:
+        return None
     if uses_pyarrow(out_dir):
-        from .pa_store import read_parquet_dir_driver
+        from .pa_store import fetch_parquet_tables
 
-        raw = read_parquet_dir_driver(spark, mdir)
-        if raw is not None and "files" not in raw.columns:
+        raw = spark.createDataFrame(pa.concat_tables(
+            fetch_parquet_tables(spark, parts), promote_options="default"
+        ))
+        if "files" not in raw.columns:
             # every part predates file tracking
             raw = raw.withColumn("files", F.lit(None).cast("string"))
         return raw
-    if has_scheme(out_dir):
-        from pyspark.errors import AnalysisException
-
-        try:
-            return spark.read.schema(MANIFEST_SPARK_SCHEMA).parquet(mdir)
-        except AnalysisException:
-            return None  # no manifest dir yet on the remote FS
-    if not os.path.isdir(mdir) or not any(
-        f.endswith(".parquet") for f in os.listdir(mdir)
-    ):
-        return None
-    return spark.read.schema(MANIFEST_SPARK_SCHEMA).parquet(mdir)
+    return spark.read.schema(MANIFEST_SPARK_SCHEMA).parquet(
+        _manifest_dir(out_dir)
+    )
 
 
 def read_manifest(
@@ -355,18 +338,9 @@ def read_manifest(
 
 
 def _list_manifest_parts(spark: SparkSession, out_dir: str) -> list[str]:
-    from .fsutil import has_scheme, list_files
+    from .fsutil import list_files
 
-    mdir = _manifest_dir(out_dir)
-    if has_scheme(out_dir):
-        return list_files(spark, mdir, ".parquet")
-    if not os.path.isdir(mdir):
-        return []
-    return [
-        os.path.join(mdir, f)
-        for f in sorted(os.listdir(mdir))
-        if f.endswith(".parquet") and not f.startswith(".")
-    ]
+    return list_files(spark, _manifest_dir(out_dir), ".parquet")
 
 
 def compact_manifest(
@@ -408,7 +382,7 @@ def compact_manifest(
     Hadoop URI / s3)."""
     import io
 
-    from .fsutil import delete_file, has_scheme, read_bytes
+    from .fsutil import delete_file, read_bytes
 
     parts = _list_manifest_parts(spark, out_dir)
     # squash stays eligible on a single part: it rewrites rows, not
@@ -454,10 +428,7 @@ def compact_manifest(
         )
     for p in parts:
         try:
-            if has_scheme(out_dir):
-                delete_file(spark, p)
-            else:
-                os.remove(p)
+            delete_file(spark, p)
         except FileNotFoundError:
             continue  # a racing compaction already removed it — safe
         # other delete failures surface: swallowing them would report
@@ -492,19 +463,9 @@ def _min_servable_as_of(spark: SparkSession, out_dir: str) -> float | None:
     vacuums record NULL: they unserve nothing). None when never
     vacuumed or nothing restricting. Legacy records without the
     column fall back to their mtime `horizon` (conservative)."""
-    from .fsutil import has_scheme, list_files
+    from .fsutil import list_files
 
-    vdir = store_path(out_dir, "vacuum")
-    if has_scheme(out_dir):
-        parts = list_files(spark, vdir, ".parquet")
-    else:
-        if not os.path.isdir(vdir):
-            return None
-        parts = [
-            os.path.join(vdir, f)
-            for f in os.listdir(vdir)
-            if f.endswith(".parquet") and not f.startswith(".")
-        ]
+    parts = list_files(spark, store_path(out_dir, "vacuum"), ".parquet")
     if not parts:
         return None
     from .pa_store import fetch_parquet_tables
@@ -597,7 +558,7 @@ def write_and_commit_run(
     written = read_chunks(
         spark, out_dir, with_file=True, run_id=run_id,
         columns=SUMMARY_COLUMNS, files=files,
-    ).filter(F.col("run_id") == run_id)
+    )
     rows = commit_summary(
         summarize_written(written.toArrow()), out_dir, snapshot_id, run_id,
         spark,

@@ -32,11 +32,17 @@ import uuid
 import pyarrow as pa
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..operators.encode import CHUNKS_ARROW_SCHEMA, CHUNKS_STORE_SPARK_SCHEMA
-from .fsutil import join_uri, list_files, pa_fs, split_query
+from .fsutil import (
+    delete_file,
+    join_uri,
+    list_files,
+    pa_fs,
+    read_all,
+    split_query,
+)
 
 #: chunk rows as persisted (run_id stamped at commit time)
 CHUNKS_STORE_ARROW_SCHEMA = pa.schema(
@@ -53,7 +59,8 @@ def write_chunks_pyarrow(
 ) -> list[dict]:
     """Write a chunk DataFrame under ``cdir`` (s3://…/chunks), one or
     more parquet objects per task, rotating at ``max_records`` rows
-    (the JVM path's maxRecordsPerFile twin). Returns the written-file
+    (the JVM path's maxRecordsPerFile twin: input batches are sliced
+    at the boundary, so no object exceeds it). Returns the written-file
     summaries; the collect is the job's action.
 
     Task-commit protocol (r6 review): an object store has no
@@ -98,12 +105,15 @@ def write_chunks_pyarrow(
             buf, nrows = [], 0
 
         for b in batches:
-            if b.num_rows == 0:
-                continue
-            buf.append(b)
-            nrows += b.num_rows
-            if max_records is not None and nrows >= max_records:
-                flush()
+            while b.num_rows:
+                take = b.num_rows
+                if max_records is not None:
+                    take = min(take, max_records - nrows)
+                buf.append(b.slice(0, take))
+                nrows += take
+                b = b.slice(take)
+                if max_records is not None and nrows >= max_records:
+                    flush()
         flush()
         yield pa.RecordBatch.from_arrays(
             [
@@ -131,16 +141,14 @@ def reconcile_run_parts(
     orphans. One directory listing (pyarrow's FileSelector has no
     server-side prefix filter); idempotent, missing files tolerated
     (two sweeps may race). Returns the number deleted."""
-    fs, _ = pa_fs(cdir)
     n = 0
     for uri in list_files(spark, cdir, ".parquet"):
         # list_files preserves the ?query routing config — strip
         # it before comparing bare object names
         name = split_query(uri)[0].rsplit("/", 1)[-1]
         if name.startswith(f"part-{prefix}-") and name not in keep:
-            _, fpath = pa_fs(uri)
             try:
-                fs.delete_file(fpath)
+                delete_file(spark, uri)
             except FileNotFoundError:
                 continue  # a concurrent sweep got there first
             # any other failure must SURFACE: the manifest already
@@ -250,51 +258,18 @@ def read_chunks_pyarrow(
 
 def fetch_parquet_tables(spark, paths: list[str]) -> list:
     """Driver-side fetch of SMALL parquet parts (manifest/vacuum
-    metadata) as arrow tables, route-aware: pyarrow schemes fetch
-    through a 16-way thread pool (IO-bound, GIL-free inside Arrow —
-    a long-lived store has one part per commit, and sequential GETs
-    make resolution O(#commits) round trips); JVM/local routes read
-    serially (py4j is not thread-safe). ONE owner for the pattern —
-    read_parquet_dir_driver and compact_manifest both ride it."""
+    metadata) as arrow tables, in order, on any route (fsutil.read_all
+    overlaps object-store GETs)."""
     import io
-    from concurrent.futures import ThreadPoolExecutor
 
     import pyarrow.parquet as pq
 
-    from .fsutil import read_bytes, uses_pyarrow
-
-    def fetch(p):
-        if uses_pyarrow(p):
-            fs, inner = pa_fs(p)
-            return pq.read_table(inner, filesystem=fs)
-        return pq.read_table(io.BytesIO(read_bytes(spark, p)))
-
-    if paths and all(uses_pyarrow(p) for p in paths):
-        with ThreadPoolExecutor(max_workers=min(16, len(paths))) as ex:
-            return list(ex.map(fetch, paths))
-    return [fetch(p) for p in paths]
-
-
-def read_parquet_dir_driver(
-    spark: SparkSession, dir_uri: str
-) -> DataFrame | None:
-    """Driver-side read of a SMALL parquet dir (manifest/vacuum parts —
-    one row per partition commit) into a DataFrame; None when the dir
-    is missing/empty. The s3 twin of spark.read.parquet for metadata
-    tables that never exceed a few MB."""
-    parts = list_files(spark, dir_uri, ".parquet")
-    if not parts:
-        return None
-    tables = fetch_parquet_tables(spark, parts)
-    return spark.createDataFrame(
-        pa.concat_tables(tables, promote_options="default")
-    )
+    return [pq.read_table(io.BytesIO(b)) for b in read_all(spark, paths)]
 
 
 __all__ = [
     "CHUNKS_STORE_ARROW_SCHEMA",
     "read_chunks_pyarrow",
-    "read_parquet_dir_driver",
     "write_chunks_pyarrow",
     "join_uri",
 ]

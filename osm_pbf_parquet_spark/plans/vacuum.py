@@ -35,7 +35,6 @@ engine adds compaction/merge on top.
 from __future__ import annotations
 
 import json
-import os
 import time
 import uuid
 
@@ -117,20 +116,7 @@ def vacuum(
         )
         .collect()  # one row per FILE — thousands, not rows; driver-safe
     )
-    from .fsutil import has_scheme
-
-    uri_store = has_scheme(out_dir)
-
-    def _stat(path):
-        """(mtime_s, size) via local stat or the remote FS (URI stores:
-        same metadata round-trip an object-store HEAD costs; fsutil
-        routes s3 through pyarrow, other schemes through Hadoop)."""
-        if uri_store:
-            from .fsutil import stat_file
-
-            return stat_file(spark, path)
-        lp = path[len("file:"):] if path.startswith("file:") else path
-        return os.path.getmtime(lp), os.path.getsize(lp)
+    from .fsutil import delete_file, split_query, stat_file, write_sidecar
 
     deleted = 0
     reclaimed = 0
@@ -138,8 +124,6 @@ def vacuum(
     # (path, size, pairs, zombie) — stat ONCE per file
     victims: list[tuple[str, int, list, bool]] = []
     victim_bytes = 0
-    from .fsutil import split_query
-
     for r in file_rows:
         path = r["file"]
         zombie = False
@@ -158,7 +142,7 @@ def vacuum(
             # stray that can never become legitimate — falls through
             # to the same age-gated victim path as orphans
         try:
-            mtime, sz = _stat(path)
+            mtime, sz = stat_file(spark, path)
         except Exception:  # noqa: BLE001 - already gone (concurrent vacuum)
             continue
         if mtime > horizon:
@@ -227,8 +211,6 @@ def vacuum(
         )
         import io
 
-        from .fsutil import write_sidecar
-
         buf = io.BytesIO()
         pq.write_table(rec, buf)
         write_sidecar(
@@ -238,15 +220,8 @@ def vacuum(
     if not dry_run:
         for path, sz, _pairs, _zomb in victims:
             try:
-                if uri_store:
-                    from .fsutil import delete_file
-
-                    if not delete_file(spark, path):
-                        continue
-                else:
-                    lp = (path[len("file:"):] if path.startswith("file:")
-                          else path)
-                    os.remove(lp)
+                if not delete_file(spark, path):
+                    continue
                 deleted += 1
                 reclaimed += sz
             except Exception:  # noqa: BLE001 - concurrent vacuum won — fine

@@ -9,7 +9,6 @@ import pytest
 from osm_pbf_parquet_spark.config import (
     MAX_CHUNK,
     MIN_CHUNK,
-    EncodeConfig,
     derive_chunk_target,
     parse_mem,
 )
@@ -27,11 +26,6 @@ def test_parse_mem():
 def test_derive_chunk_target_bounds(spark):
     t = derive_chunk_target(spark)
     assert MIN_CHUNK <= t <= MAX_CHUNK
-
-
-def test_encode_config_resolution(spark):
-    assert EncodeConfig(target_chunk_bytes=7 << 20).resolved_chunk_bytes(spark) == 7 << 20
-    assert MIN_CHUNK <= EncodeConfig().resolved_chunk_bytes(spark) <= MAX_CHUNK
 
 
 def test_zstd_level_changes_payload_and_roundtrips():

@@ -79,7 +79,7 @@ def test_read_osm_pbf_over_s3_end_to_end(spark, s3_pbf):
 
 
 def test_ranged_read_over_s3(s3_pbf):
-    from osm_pbf_parquet_spark.sources.pbf import _read_range
+    from osm_pbf_parquet_spark.plans.fsutil import read_range as _read_range
 
     local, uri = s3_pbf
     with open(local, "rb") as f:
