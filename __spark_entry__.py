@@ -85,10 +85,11 @@ def _ensure_workers_see_package(spark: SparkSession) -> None:
         if spark.conf.get(
             "spark.sql.adaptive.coalescePartitions.initialPartitionNum", None
         ) is None:
-            cores = spark.sparkContext.defaultParallelism or 4
+            from osm_pbf_parquet_spark.config import aqe_initial_partitions
+
             spark.conf.set(
                 "spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-                str(max(1024, 8 * cores)),
+                str(aqe_initial_partitions(spark)),
             )
     except Exception:  # noqa: BLE001 — conf absent: no-op
         pass

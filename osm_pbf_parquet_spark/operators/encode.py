@@ -10,8 +10,8 @@ partitioned layout):
     .mapInArrow(encode_fn, CHUNKS_ARROW_SCHEMA)   # vectorized, JVM↔Arrow
 
 The unit of routing is the partition id (the reference's blob); a task
-encodes one or more pids (T ≤ N, sized by bytes); the
-unit of output is the (partition_id, chunk_seq) chunk group, cut when
+encodes one or more pids (T ≤ N, sized by bytes in config.encode_width);
+the unit of output is the (partition_id, chunk_seq) chunk group, cut when
 accumulated Arrow bytes reach `target_chunk_bytes` — the reference's
 `finish_batch` / 500 MB file-rotation twins (src/sink.rs:75-94).
 
@@ -32,7 +32,13 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..config import aqe_enabled
+from ..config import (
+    decode_width,
+    derive_chunk_target,
+    derive_num_partitions,
+    encode_width,
+    plan_bytes,
+)
 from ..functions.codecs import decode_array, encode_array
 
 PID_COL = "__pid__"
@@ -87,49 +93,6 @@ CHUNKS_SPARK_SCHEMA = T.StructType(
 CHUNKS_STORE_SPARK_SCHEMA = T.StructType(
     list(CHUNKS_SPARK_SCHEMA.fields) + [T.StructField("run_id", T.StringType())]
 )
-
-
-def _exchange_buckets(spark, num_partitions: int) -> int:
-    """Task-bucket count for the pid-keyed exchange (r7).
-
-    Hashing N distinct pid values into exactly N buckets leaves ~1/e
-    of the tasks empty and hands some tasks 2-3 pids (guide §2.5:
-    synthetic keys with too few distinct values) — at the sf1 bench
-    that made the encode exchange's critical path ~3 pid-units instead
-    of 1. Spreading the same pids over ~4x buckets makes collisions
-    rare (E[pairs] ~ N²/2B), and clearing the bypass-merge threshold
-    switches the shuffle to the one-file-per-map sort writer instead
-    of maps x buckets file creates (see config.derive_shuffle_
-    partitions). Empty buckets cost one ~10 ms no-input task each.
-    The pid VALUES — and therefore every chunk row — are unchanged;
-    only the pid -> task placement spreads, and rows of one pid still
-    land in exactly one task (hash of the pid value), which is the
-    invariant (partition_id, chunk_seq) uniqueness needs.
-    """
-    from ..config import bypass_merge_threshold
-
-    return max(bypass_merge_threshold(spark) + 1, 4 * num_partitions + 1)
-
-
-#: spread the encode exchange only when a pid carries at least this
-#: much data: the spread's ~3x empty buckets each pay a no-input
-#: python worker task (~10 ms), which only amortizes against heavy
-#: per-pid bridge+kernel work. sf1 A/B (same session, best-of-3):
-#: lineitem at 29 MB/pid 3.99 -> 3.51 s with spread; events at
-#: 0.5 MB/pid 1.08 -> 2.18 s WITH spread (regression) — hence gated.
-SPREAD_MIN_BYTES_PER_PID = 16 << 20
-
-
-def _plan_size_estimate(df: DataFrame) -> int | None:
-    """Catalyst's optimized-plan size estimate (exact for cached
-    relations and file scans, heuristic after transforms); None when
-    the internal API is unavailable."""
-    try:
-        return int(
-            df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
-        )
-    except Exception:  # noqa: BLE001 — estimate-only path
-        return None
 
 
 def with_partition_id(
@@ -347,8 +310,8 @@ def encode_dataframe(
     num_partitions is the number of pid VALUES (None derives ≥ 8×
     cores, config.derive_num_partitions). It fixes which rows share a
     chunk group, not how many tasks encode them: a light input runs
-    on about one task per chunk target of bytes (see the routing
-    below). Pin it explicitly when pids must stay stable across
+    on about one task per chunk target of bytes (config.encode_width).
+    Pin it explicitly when pids must stay stable across
     differently-sized clusters (resumable stores record it in
     store_meta and encode_job reuses that).
 
@@ -361,51 +324,18 @@ def encode_dataframe(
     of Z-ordering.
     """
     if target_chunk_bytes is None:
-        from ..config import derive_chunk_target
-
         target_chunk_bytes = derive_chunk_target(df.sparkSession)
     if num_partitions is None:
-        from ..config import derive_num_partitions
-
         num_partitions = derive_num_partitions(df.sparkSession)
     if PID_COL in df.columns:
         with_pid = df
     else:
         with_pid = with_partition_id(df, key_col, num_partitions, pid_expr)
-    est = _plan_size_estimate(df)
-    if est is not None and est // max(1, num_partitions) >= SPREAD_MIN_BYTES_PER_PID:
-        # heavy per-pid work: route via the AQE-coalescible keyed
-        # repartition (no explicit N) — with the session hook's high
-        # initialPartitionNum the exchange uses the single-file sort
-        # writer, pid values rarely collide, and AQE folds the empty
-        # buckets away instead of paying ~200 no-input python workers
-        # (sf1 A/B: 3.22 s vs 3.74 s explicit-spread vs 3.99 s fixed-N
-        # on encode_lineitem). Rows of one pid always land in exactly
-        # one task: AQE coalescing merges whole reducer buckets, never
-        # splits one. Fixed-N spread is the non-AQE fallback.
-        if aqe_enabled(df.sparkSession):
-            routed = with_pid.repartition(PID_COL)
-        else:
-            routed = with_pid.repartition(
-                _exchange_buckets(df.sparkSession, num_partitions), PID_COL
-            )
+    tasks = encode_width(df.sparkSession, plan_bytes(df), num_partitions,
+                         target_chunk_bytes)
+    if tasks is None:
+        routed = with_pid.repartition(PID_COL)
     else:
-        # light per-pid work: a fixed-N exchange is cheapest — the AQE
-        # shape's map-side 1024-bucket writer + planning rounds cost
-        # more than they save (sf1 A/B: events 1.08 s fixed vs 2.18 s
-        # spread; docs roundtrip 0.95 vs 1.18 full-AQE). N follows the
-        # input BYTES, not the pid count: every python task costs
-        # ~0.3 s of worker CPU whatever its data (CLAUDE.md), so one
-        # task per pid spent most of a small encode on task setup
-        # (identity mapInArrow over the pages bench input, local[4]:
-        # 0.53 s at 4 tasks, 2.8 s at 32). About one chunk target of input per
-        # task, at least one task per core, at most one per pid; the
-        # pid values and so every chunk group are unchanged, a task
-        # just encodes several pids (encode_fn keeps them apart).
-        tasks = num_partitions
-        if est is not None:
-            cores = df.sparkSession.sparkContext.defaultParallelism or 4
-            tasks = min(num_partitions, max(cores, -(-est // target_chunk_bytes)))
         routed = with_pid.repartition(tasks, PID_COL)
     if sort_cols:
         routed = routed.sortWithinPartitions(PID_COL, *sort_cols)
@@ -439,8 +369,6 @@ def encode_input_partitions(
     required.
     """
     if target_chunk_bytes is None:
-        from ..config import derive_chunk_target
-
         target_chunk_bytes = derive_chunk_target(df.sparkSession)
     with_pid = df.withColumn(PID_COL, F.spark_partition_id().cast("long"))
     return with_pid.mapInArrow(
@@ -617,7 +545,9 @@ def decode_dataframe(
     """Decode chunk rows back to the source schema, bit-identically.
 
     Chunks of one partition_id are co-located by a repartition on
-    partition_id so each task can reassemble complete row groups.
+    partition_id so each task can reassemble complete row groups; the
+    repartition's width is config.decode_width unless num_partitions
+    pins it.
 
     row_filter (see make_decode_fn) pushes simple conjuncts inside the
     Arrow worker: fully-filtered chunk groups skip decoding their
@@ -625,37 +555,11 @@ def decode_dataframe(
     Python→JVM boundary. Re-apply the exact predicate on the result —
     the worker-side filter is an optimization, not the semantic gate.
     """
-    # r7 (second iteration): size the co-location exchange from the
-    # chunk table's OWN byte estimate instead of AQE's advisory.
-    # The earlier r7 draft used the AQE keyed repartition (no N); AQE
-    # then coalesced by spark.sql.adaptive.advisoryPartitionSizeInBytes
-    # (64 MB default) — a target tuned for JVM row work, ~15× too
-    # coarse for a python decode kernel whose input is COMPRESSED
-    # chunk payload (decompress fan-out ~6× + Arrow ship of the full
-    # decoded width). Measured (one session per scale, local[32],
-    # cached 64-group lineitem chunk table): sf0.1 AQE folded the
-    # decode to one ~32 MB task → 3.2 s vs 0.64 s here; 10× AQE 4.4 s vs
-    # 1.5 s here. Catalyst's size estimate is exact for cached
-    # relations and file scans (the normal chunk-store feeds), so
-    # N ≈ est / decode_task_target_bytes spawns only byte-justified
-    # python workers — a point lookup's pruned survivors still fold
-    # to ~1 task (tiny est), and a 100 TB store gets the 4×cores cap
-    # (cores-derived, not a local constant; pin num_partitions to
-    # override). Keyed by (run_id, partition_id, chunk_seq): cells of
-    # one group always share all three, and the finer key spreads
-    # few-pid / many-seq stores that a pid-only key would skew.
+    # keyed by (run_id, partition_id, chunk_seq): cells of one group
+    # always share all three, and the finer key spreads few-pid /
+    # many-seq stores that a pid-only key would skew
     if num_partitions is None:
-        from ..config import derive_decode_task_bytes
-
-        est = _plan_size_estimate(chunks_df)
-        cores = chunks_df.sparkSession.sparkContext.defaultParallelism or 4
-        if est is not None:
-            n = max(1, min(
-                -(-est // derive_decode_task_bytes(chunks_df.sparkSession)),
-                4 * cores,
-            ))
-        else:
-            n = 2 * cores
+        n = decode_width(chunks_df.sparkSession, plan_bytes(chunks_df))
     else:
         n = int(num_partitions)
     group_cols = [

@@ -23,6 +23,7 @@ import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..config import compact_width, derive_chunk_target
 from ..functions.codecs import decode_array
 from ..operators.encode import CHUNKS_SPARK_SCHEMA, _encode_group, verify_checksum
 from .manifest import (
@@ -118,12 +119,8 @@ def compact_partitions(
         return {"compacted_partitions": 0}
 
     visible = read_committed_chunks(spark, out_dir, targets)
-    n = num_partitions or int(
-        spark.conf.get("spark.sql.shuffle.partitions", "32")
-    )
+    n = num_partitions or compact_width(spark)
     if target_chunk_bytes is None:
-        from ..config import derive_chunk_target
-
         target_chunk_bytes = derive_chunk_target(spark)
     run_id = uuid.uuid4().hex[:12]
     compacted = (

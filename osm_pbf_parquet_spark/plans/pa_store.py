@@ -34,6 +34,7 @@ import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
+from ..config import striped_frame
 from ..operators.encode import CHUNKS_ARROW_SCHEMA, CHUNKS_STORE_SPARK_SCHEMA
 from .fsutil import (
     delete_file,
@@ -197,15 +198,7 @@ def read_chunks_pyarrow(
     schema = T.StructType(fields)
     if not files:
         return spark.createDataFrame([], schema)
-    sc = spark.sparkContext
-    n = min(len(files), sc.defaultParallelism * 2)
-    strided = [f for i in range(n) for f in files[i::n]]
-    # createDataFrame over the strided list (same shape as
-    # read_osm_pbf): it plans as `Scan ExistingRDD` in
-    # defaultParallelism slices with no Exchange; its lineage still
-    # holds PySpark's identity PythonRDD. Any contiguous re-slicing
-    # preserves the stride balance.
-    pdf = spark.createDataFrame([(f,) for f in strided], "path string")
+    pdf = striped_frame(spark, [(f,) for f in files], "path string")
     want = [
         CHUNKS_STORE_ARROW_SCHEMA.field(f.name) for f in store_fields
     ]

@@ -11,8 +11,8 @@ Spark-first:
      same cheap index pass the reference's sequential reader amortizes.
      At 100 TB on S3 this is a ranged-GET walk of the headers (or a
      sidecar index file); the index itself is tiny (16 B/block).
-  2. `read_framed` — the index becomes a DataFrame, repartitioned so
-     each TASK owns a slice of blocks (the reference's task-per-blob
+  2. `read_framed` — the index becomes a DataFrame, striped so each
+     TASK owns a balanced slice of blocks (the reference's task-per-blob
      fan-out, src/pbf.rs:64-89), and a mapInArrow kernel seeks/reads/
      inflates/parses its blocks independently — block-parallel decode
      with zero shuffle and per-task memory bounded by the largest
@@ -34,6 +34,8 @@ from collections.abc import Iterator
 import pyarrow as pa
 
 from pyspark.sql import DataFrame, SparkSession
+
+from ..config import striped_frame
 
 FRAME_HEADER = struct.Struct(">I")
 MAX_FRAME_BYTES = 1 << 30  # sanity bound: a corrupt length must not OOM
@@ -95,9 +97,7 @@ def decode_block(path: str, offset: int, length: int) -> pa.Table:
     return pa.ipc.open_stream(io.BytesIO(raw)).read_all()
 
 
-def read_framed(
-    spark: SparkSession, path: str, num_partitions: int | None = None
-) -> DataFrame:
+def read_framed(spark: SparkSession, path: str) -> DataFrame:
     """Framed binary file → DataFrame, block-parallel.
 
     The frame index is parallelized across tasks; each task seeks and
@@ -114,19 +114,10 @@ def read_framed(
 
     spark_schema = from_arrow_schema(arrow_schema)
 
-    n = num_partitions or min(
-        len(idx), int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    )
-    # stride-interleave + createDataFrame (same shape as
-    # read_osm_pbf): the old round-robin repartition(n) was a full
-    # Exchange stage of the index rows. The list plans as `Scan
-    # ExistingRDD` in defaultParallelism slices with no shuffle (see
-    # read_osm_pbf), and striding keeps any contiguous re-slicing
-    # balanced across the file's regions.
-    rows = [(path, o, ln) for o, ln in idx]
-    strided = [r for i in range(n) for r in rows[i::n]]
-    index_df = spark.createDataFrame(
-        strided, "path string, offset long, length long"
+    # one row per block, striped like read_osm_pbf's blob index
+    index_df = striped_frame(
+        spark, [(path, o, ln) for o, ln in idx],
+        "path string, offset long, length long",
     )
 
     def decode_fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:

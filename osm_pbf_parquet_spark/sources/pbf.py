@@ -50,6 +50,7 @@ from collections.abc import Iterator
 import numpy as np
 import pyarrow as pa
 
+from ..config import striped_frame
 from ..plans.fsutil import (
     is_local,
     open_ranged,
@@ -1561,8 +1562,7 @@ def decode_osm_blob(path: str, offset: int, length: int) -> pa.Table:
     return parse_primitive_block(_blob_payload(blob))
 
 
-def read_osm_pbf(spark, path: str, num_partitions: int | None = None,
-                 columns: list[str] | None = None):
+def read_osm_pbf(spark, path: str, columns: list[str] | None = None):
     """.osm.pbf → unified-schema DataFrame, block-parallel (zero
     shuffle; each task seeks/inflates/parses only its own blobs).
 
@@ -1588,42 +1588,10 @@ def read_osm_pbf(spark, path: str, num_partitions: int | None = None,
     if not idx:
         raise ValueError(f"no OSMData blobs in {path}")
     path = resolve_worker_path(spark, path)
-    if num_partitions:
-        n = num_partitions
-    else:
-        # 2× cores, NOT the engine-wide 8× default: PBF blobs are
-        # uniform (~8k elements each — the format targets fixed-size
-        # PrimitiveBlocks), so the straggler-tail argument behind 8×
-        # (r3, skew-prone keyed encodes) doesn't apply, while each
-        # mapInArrow task pays a fixed worker/Arrow-stream setup that
-        # coarse tasks amortize. Measured, 3.3M-element fixture at
-        # local[16]: 16 tasks 1.97M el/s, 32 → 1.90M, 64 → 1.36M,
-        # 128 (the 8× default) → 0.98M. On a 1000-executor cluster a
-        # planet file still yields tens of thousands of blobs spread
-        # 2× over slots — granularity stays cluster-wide.
-        from ..config import derive_num_partitions
-
-        n = min(len(idx), derive_num_partitions(spark, factor=2, floor=8))
-    # driver-local index through createDataFrame over a list. It plans
-    # as `Scan ExistingRDD`, not a LocalTableScan: its lineage keeps a
-    # PythonRDD (PySpark's identity re-serialization of the list)
-    # under SerDeUtil, and it splits into defaultParallelism tasks,
-    # not n (4 tasks for the 8 blobs of the perfbench PBF at
-    # local[4]). A `spark.range(len, numPartitions=n)` leaf has no
-    # PythonRDD but measured slower: read_osm_pbf into a noop went
-    # 0.636 → 0.710 s median, 8 tasks against 4 (4 vCPU, local[4]).
-    # The list is STRIDE-INTERLEAVED first (task t gets blobs t, t+n,
-    # …): element types cluster by file position (a planet file is a
-    # long dense-node run, then ways, then relations) and per-blob
-    # decode cost differs by type, so contiguous runs hand whole
-    # way/relation regions to a few straggler tasks (measured 2x wall
-    # on the mixed 13.2M fixture). Any contiguous re-slicing of the
-    # strided list preserves the per-task type mix, so the exact
-    # slice count does not matter.
-    rows = [(path, o, ln) for o, ln in idx]
-    strided = [r for i in range(n) for r in rows[i::n]]
-    index_df = spark.createDataFrame(
-        strided, "path string, offset long, length long"
+    # one row per blob, striped so every task mixes element types
+    index_df = striped_frame(
+        spark, [(path, o, ln) for o, ln in idx],
+        "path string, offset long, length long",
     )
     spark_schema = T.StructType(
         [

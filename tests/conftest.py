@@ -4,6 +4,13 @@ import os
 
 import pytest
 
+# Building an S3 client makes the AWS SDK probe the EC2 instance-metadata
+# service (IMDS) for credentials and region; off EC2 the probe can wait
+# ~2 s per client before it gives up. The s3-stub tests put every
+# credential in the URI, so they need no probe. Set before the session
+# JVM starts so Spark's Python workers inherit it.
+os.environ.setdefault("AWS_EC2_METADATA_DISABLED", "true")
+
 
 @pytest.fixture(scope="session")
 def spark():

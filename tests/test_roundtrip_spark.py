@@ -161,10 +161,10 @@ def test_light_encode_width_follows_bytes(spark, pages_path):
     per chunk target of input bytes, at least one per core, instead of
     one per pid value — and its chunk rows are exactly those of one
     task per pid value (the previous routing), bytes_in included."""
+    from osm_pbf_parquet_spark.config import plan_bytes as _plan_size_estimate
     from osm_pbf_parquet_spark.operators.encode import (
         CHUNKS_SPARK_SCHEMA,
         PID_COL,
-        _plan_size_estimate,
         make_encode_fn,
         with_partition_id,
     )
